@@ -44,6 +44,15 @@ def _defs_from_records(concepts) -> dict[str, str]:
     return out
 
 
+def _index_from_records(concepts) -> TerminologyIndex:
+    """Index over parsed loader records in CUI order — the order
+    ``build_index_df`` pins, so code_map's first-wins choice does not
+    depend on which loader built the index."""
+    from nobletools_spark.index import build_index
+
+    return build_index(sorted(concepts, key=lambda c: c["cui"]))
+
+
 class NobleCoderSpark:
     def __init__(self, index: TerminologyIndex,
                  cfg: MatchConfig = MatchConfig(), context=None):
@@ -86,14 +95,10 @@ class NobleCoderSpark:
     @classmethod
     def from_obo(cls, spark, obo_text: str, cfg: MatchConfig = MatchConfig(),
                  context=None) -> "NobleCoderSpark":
-        from nobletools_spark.index import build_index_df
-        from nobletools_spark.sources.obo import (
-            concepts_df_from_records,
-            parse_obo,
-        )
+        from nobletools_spark.sources.obo import parse_obo
 
         concepts, edges = parse_obo(obo_text)
-        idx = build_index_df(spark, concepts_df_from_records(spark, concepts))
+        idx = _index_from_records(concepts)
         inst = cls(idx, cfg, context)
         inst.isa_edges = tuple(edges)
         inst.definitions = _defs_from_records(concepts)
@@ -112,13 +117,11 @@ class NobleCoderSpark:
         resolver dict for offline modular ontologies.
         ``union_children=True`` opts into the semantic ``A ≡ B ∪ C``
         member edges the reference's structural reasoner omits."""
-        from nobletools_spark.index import build_index_df
-        from nobletools_spark.sources.obo import concepts_df_from_records
         from nobletools_spark.sources.owl import parse_owl
 
         concepts, edges = parse_owl(owl_xml, imports=imports,
                                     union_children=union_children)
-        idx = build_index_df(spark, concepts_df_from_records(spark, concepts))
+        idx = _index_from_records(concepts)
         inst = cls(idx, cfg, context)
         inst.isa_edges = tuple(edges)
         inst.definitions = _defs_from_records(concepts)
@@ -133,8 +136,6 @@ class NobleCoderSpark:
         ``<Options>`` block is applied over ``cfg`` exactly as the
         reference's setSearchProperties would (only the user-settable
         keys; see ``match_config_from_properties``)."""
-        from nobletools_spark.index import build_index_df
-        from nobletools_spark.sources.obo import concepts_df_from_records
         import xml.etree.ElementTree as ET
 
         from nobletools_spark.sources.termxml import (
@@ -143,7 +144,7 @@ class NobleCoderSpark:
         root = ET.fromstring(xml_text)  # parse once, feed both readers
         concepts, edges = parse_term_xml(root)
         cfg = match_config_from_properties(term_xml_options(root), cfg)
-        idx = build_index_df(spark, concepts_df_from_records(spark, concepts))
+        idx = _index_from_records(concepts)
         inst = cls(idx, cfg, context)
         inst.isa_edges = tuple(edges)
         inst.definitions = _defs_from_records(concepts)
@@ -162,11 +163,8 @@ class NobleCoderSpark:
         every local loader builds — per-mention network lookups inside
         executors would be the 100 TB anti-pattern (docs × RPC latency
         against a non-reproducible moving target)."""
-        from nobletools_spark.index import build_index_df
-        from nobletools_spark.sources.obo import concepts_df_from_records
-
         concepts, edges = remote.fetch_all(max_concepts=max_concepts)
-        idx = build_index_df(spark, concepts_df_from_records(spark, concepts))
+        idx = _index_from_records(concepts)
         inst = cls(idx, cfg, context)
         inst.isa_edges = tuple(edges)
         inst.definitions = _defs_from_records(concepts)

@@ -1,20 +1,20 @@
-"""Terminology index construction — DataFrame-first with a local path.
+"""Terminology index construction — one local assembler.
 
 The reference builds its inverted index row-by-row into JDBM maps
 (util/ConceptImporter.java:920-961 — including a hand-rolled external
-group-by through temp word files). In Spark the same artifact is four
-declarative aggregations:
+group-by through temp word files). Here ``build_index`` assembles the
+same artifact in one driver-side pass over the concept records:
 
-    terms       = concepts → explode(synonyms) → normalize → (term, cui)
-    term_cuis   = terms.groupBy(term).collect_set(cui)
-    word_terms  = terms → explode(split(term)) → groupBy(word).collect_set(term)
-    word_stats  = word_terms → size(terms)     (WordStat.termCount,
+    term_cuis   = normalized term → CUIs
+    word_terms  = word → terms of the same concept containing it
+    word_stats  = |word_terms[word]|  (WordStat.termCount,
                   NobleCoderTerminology.java:398-401)
 
-The collected result is pickled into a TerminologyIndex and broadcast;
-the annotate stage then runs map-only (zero shuffle) at any corpus scale.
-Shuffles happen only here, over the (small) terminology — never over the
-10^12-document corpus.
+``build_index_df`` feeds it from a concepts DataFrame with one Arrow
+collect. The result is pickled into a TerminologyIndex and broadcast;
+the annotate stage then runs map-only (zero shuffle) at any corpus
+scale. ``terms_df``/``word_stats_df`` keep the normalization and word
+statistics available as standalone DataFrame queries.
 
 Scale levers:
 - ``compact=True`` — rare-word index (ConceptImporter.compact
@@ -70,13 +70,13 @@ def concept_terms(name: str, synonyms: Sequence[str],
 
 
 def _compact_word_terms(term_cuis, word_term_count):
-    """Rare-word compaction shared by both index builders
-    (ConceptImporter.java:1363-1443): keep each term only under its
-    rarest word — getRarestWord (:1258-1270) uses strict <, so ties
-    keep the FIRST word in term order. Post-compact counts are
-    recomputed per surviving word (saveWordTerms re-run :1420); words
-    no longer hosting any term keep their stale pre-compact counts,
-    exactly like the reference's un-backed-up wordStatMap."""
+    """Rare-word compaction (ConceptImporter.java:1363-1443): keep each
+    term only under its rarest word — getRarestWord (:1258-1270) uses
+    strict <, so ties keep the FIRST word in term order. Post-compact
+    counts are recomputed per surviving word (saveWordTerms re-run
+    :1420); words no longer hosting any term keep their stale
+    pre-compact counts, exactly like the reference's un-backed-up
+    wordStatMap."""
     compacted: dict[str, set[str]] = defaultdict(set)
     for term in term_cuis:
         rarest, best_n = None, float("inf")
@@ -94,7 +94,7 @@ def build_index(concepts: Iterable[ConceptMeta | Mapping],
                 compact: bool = False,
                 blacklist: bool = False) -> TerminologyIndex:
     """Local (driver-side) index build — terminologies are small relative
-    to the corpus; this is also what the DataFrame path collects into."""
+    to the corpus; ``build_index_df`` collects into this too."""
     metas: dict[str, ConceptMeta] = {}
     term_cuis: dict[str, set[str]] = defaultdict(set)
     regex_terms: list[tuple[str, str]] = []
@@ -143,8 +143,7 @@ def build_index(concepts: Iterable[ConceptMeta | Mapping],
         # sorted by (source, cui) — concept_terms hands back a SET, and
         # _search_regexp is order-sensitive (later pattern wins on equal
         # spans), so hash-seed iteration order would make matcher output
-        # vary run to run; this is also build_index_df's exact order, so
-        # the two builders stay interchangeable
+        # vary run to run
         regex_terms=tuple((r"\b(" + r + r")\b", cui)
                           for r, cui in sorted(regex_terms)),
         compacted=compact,
@@ -192,8 +191,8 @@ def build_blacklist(idx: TerminologyIndex,
 
 
 def terms_df(spark, concepts_df):
-    """(cui, term) normalized-term DataFrame — the declarative half of the
-    index build, reusable as a standalone query (word stats, blacklist)."""
+    """(cui, term) normalized-term DataFrame — the index's term
+    normalization as a standalone query (word stats, blacklist)."""
     import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -223,7 +222,7 @@ def word_stats_df(terms):
     ConceptImporter.saveWordTerms/filterTerms :1299-1355): a word —
     token of some term of a concept — counts every distinct term of
     the SAME concept that contains it as a substring ('ran' counts
-    'grand'), matching build_index/build_index_df's word_term_count
+    'grand'), matching build_index's word_term_count
     (regex pseudo-terms excepted: they live only in the matcher
     index). Tokenize + cui-keyed contains-join + groupBy — all
     terminology-sized shuffles with map-side partials."""
@@ -242,114 +241,30 @@ def word_stats_df(terms):
 
 def build_index_df(spark, concepts_df, compact: bool = False,
                    blacklist: bool = False) -> TerminologyIndex:
-    """DataFrame-path index build — the shape that scales on a cluster.
+    """Index build from a concepts DataFrame: ONE Arrow collect of the
+    terminology table, then the local assembler ``build_index``.
 
     ``concepts_df`` schema: (cui string, name string,
-    synonyms array<string>, semtypes array<string>, sources array<string>).
+    synonyms array<string>, semtypes array<string>, sources array<string>
+    [, codes array<struct<sab, code>>]).
 
-    Normalization runs in an Arrow-batched pandas UDF; the groupBys are
-    Spark shuffles with map-side partial aggregation. The final collect is
-    the broadcast-artifact build (index << corpus).
+    The terminology is small next to the corpus and the index is built
+    once, so running normalization in Python workers only adds UDF
+    transport. Rows are sorted by cui: dict insertion order feeds the
+    first-wins code_map, and a bare collect order varies with file
+    splits/AQE — the local build keeps caller insertion order (the
+    reference's addConcept order), this build pins a deterministic one.
+    ``spark`` is unused; it stays for the callers' signature.
     """
-    import pandas as pd  # noqa: F401 (executor-side)
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from nobletools_spark.session import ship_package
-
-    ship_package(spark)
-
-    def _make(kind: int):
-        def _udf(names, syns):
-            out = []
-            for name, syn in zip(names, syns):
-                pair = concept_terms(name, list(syn) if syn is not None else [])
-                out.append(sorted(pair[kind]))
-            return pd.Series(out)
-        return _udf
-
-    norm_terms = F.pandas_udf(_make(0), T.ArrayType(T.StringType()))
-    regex_srcs = F.pandas_udf(_make(1), T.ArrayType(T.StringType()))
-
-    # persist: three collect() actions below would otherwise re-run
-    # the pandas-UDF normalization of every synonym three times — the
-    # dominant CPU of the build on a large vocabulary
-    base = concepts_df.select(
-        "cui", "name", "synonyms", "semtypes", "sources",
-        norm_terms("name", "synonyms").alias("terms"),
-        regex_srcs("name", "synonyms").alias("regexes"),
-    ).persist()
-    terms = (base.select("cui", F.explode("terms").alias("term"))
-             .distinct())
-    term_cuis_rows = (terms.groupBy("term")
-                      .agg(F.sort_array(F.collect_set("cui")).alias("cuis"))
-                      .collect())
-    regex_rows = (base.select("cui", F.explode("regexes").alias("re"))
-                  .distinct().collect())
-    has_codes = "codes" in concepts_df.columns
-    meta_cols = ["cui", "name", "synonyms", "semtypes", "sources"] \
-        + (["codes"] if has_codes else [])
-    # sort collected rows by cui: dict insertion order feeds the
-    # first-wins code_map, and a bare collect() order varies with file
-    # splits/AQE — the local build keeps caller insertion order (the
-    # reference's addConcept order), the distributed build pins a
-    # deterministic one
-    meta_rows = sorted(concepts_df.select(*meta_cols).collect(),
-                       key=lambda r: r["cui"])
-
-    term_cuis = {r["term"]: tuple(r["cuis"]) for r in term_cuis_rows}
-    metas = {
-        r["cui"]: ConceptMeta(
-            r["cui"], r["name"],
-            tuple(r["synonyms"] or ()), tuple(r["semtypes"] or ()),
-            tuple(r["sources"] or ()),
-            tuple((c[0], c[1]) for c in (r["codes"] or ()))
-            if has_codes else ())
-        for r in meta_rows
-    }
-
-    # word explode + stats as DataFrame aggregations (the scale path).
-    # saveWordTerms/filterTerms parity (ConceptImporter.java:1299-1355):
-    # a word of a normal term attaches every of its CONCEPT's terms that
-    # contains the word as a SUBSTRING — including raw '/regex/' strings
-    # (they never resolve via termMap but count toward word stats, the
-    # rarest-first sweep order, and partial-mode used-word marking).
-    all_terms = F.concat(
-        F.col("terms"),
-        F.transform("regexes", lambda r: F.concat(F.lit("/"), r, F.lit("/"))))
-    word_terms_rows = (
-        base.select(F.explode("terms").alias("term"),
-                    all_terms.alias("all_terms"))
-        .select(F.explode(F.split("term", " ")).alias("word"), "all_terms")
-        .select("word", F.explode(F.filter(
-            "all_terms",
-            lambda t: t.contains(F.col("word")))).alias("term"))
-        .distinct()
-        .groupBy("word")
-        .agg(F.sort_array(F.collect_set("term")).alias("terms"))
-        .collect())
-    base.unpersist()
-    word_terms = {r["word"]: set(r["terms"]) for r in word_terms_rows}
-    word_term_count = {w: len(ts) for w, ts in word_terms.items()}
-
-    if compact:
-        word_terms, word_term_count = _compact_word_terms(
-            term_cuis, word_term_count)
-
-    idx = TerminologyIndex(
-        word_terms={w: tuple(sorted(ts)) for w, ts in word_terms.items()},
-        term_cuis=term_cuis,
-        word_term_count=word_term_count,
-        concepts=metas,
-        regex_terms=tuple((r"\b(" + r["re"] + r")\b", r["cui"])
-                          for r in sorted(regex_rows,
-                                          key=lambda x: (x["re"], x["cui"]))),
-        compacted=compact,
-        code_map=build_code_map(metas),
-    )
-    if blacklist:
-        idx.blacklist = build_blacklist(idx)
-    return idx
+    cols = [c for c in ("cui", "name", "synonyms", "semtypes", "sources",
+                        "codes") if c in concepts_df.columns]
+    rows = concepts_df.select(*cols).toArrow().to_pylist()
+    for r in rows:
+        # Arrow hands structs back as {"sab", "code"} dicts — unpacking a
+        # dict as a pair would yield its KEYS
+        r["codes"] = [(c["sab"], c["code"]) for c in r.get("codes") or ()]
+    rows.sort(key=lambda r: r["cui"])
+    return build_index(rows, compact=compact, blacklist=blacklist)
 
 
 def terminology_diff(old_df, new_df):

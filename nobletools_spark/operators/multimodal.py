@@ -770,9 +770,10 @@ def _pick_timed_frames(times_ms: list[int], frames: list[bytes],
                        every_ms: int,
                        max_frames: int) -> list[tuple[int, bytes, int]]:
     """First frame at/after each ``every_ms`` target → [(source index,
-    payload, ts_ms)], capped at ``max_frames``. The target catches up
-    PAST each emitted timestamp so a variable-frame-rate gap doesn't
-    burst consecutive frames at the next targets."""
+    payload, ts_ms)], capped at ``max_frames``. The target jumps to the
+    first multiple of ``every_ms`` PAST each emitted timestamp (in O(1),
+    whatever the timescale) so a variable-frame-rate gap doesn't burst
+    consecutive frames at the next targets."""
     out: list[tuple[int, bytes, int]] = []
     target = 0
     for src_i, (ts, fr) in enumerate(zip(times_ms, frames)):
@@ -780,8 +781,7 @@ def _pick_timed_frames(times_ms: list[int], frames: list[bytes],
             break
         if ts >= target:
             out.append((src_i, fr, ts))
-            while target <= ts:
-                target += every_ms
+            target = (ts // every_ms + 1) * every_ms
     return out
 
 
@@ -797,10 +797,11 @@ def sample_frames(media_df: DataFrame, every_ms: int = 1000,
     (JPEG for MJPEG AVIs, codec samples otherwise). Unrecognized or
     malformed containers fall back to the deterministic stub so the
     plumbing stays exercised."""
-    # loud driver-side guards: every_ms <= 0 would spin the timed-frame
-    # catch-up loop forever INSIDE an executor task (no exception, no
-    # stub fallback — a wedged stage); max_frames < 1 would
-    # ZeroDivisionError out of the stub path's modulo
+    # loud driver-side guards: every_ms == 0 would ZeroDivisionError
+    # the timed-frame target INSIDE an executor task (not a ValueError,
+    # so no stub fallback — a failed stage) and every_ms < 0 would pick
+    # every frame; max_frames < 1 would ZeroDivisionError out of the
+    # stub path's modulo
     if every_ms <= 0:
         raise ValueError(f"every_ms must be positive, got {every_ms}")
     if max_frames < 1:

@@ -34,6 +34,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from nobletools_spark.session import hadoop_fs
+
 
 @dataclass
 class Stage:
@@ -135,20 +137,8 @@ def _df_digest(df) -> str:
     return _stable_digest(rows)
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` via the JVM Hadoop FS API — the
-    same resolution Spark's own writers use, so manifests live on the
-    SAME filesystem as the stage parquet (local, HDFS, S3A, …) instead
-    of silently landing on the driver's local disk for remote
-    out_dirs."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, p
-
-
 def _fs_read_json(spark: SparkSession, path: str) -> dict | None:
-    fs, p = _hadoop_fs(spark, path)
+    fs, p = hadoop_fs(spark, path)
     if not fs.exists(p):
         return None
     stream = fs.open(p)
@@ -164,7 +154,7 @@ def _fs_read_json(spark: SparkSession, path: str) -> dict | None:
 
 
 def _fs_write_json(spark: SparkSession, path: str, obj: dict) -> None:
-    fs, p = _hadoop_fs(spark, path)
+    fs, p = hadoop_fs(spark, path)
     out = fs.create(p, True)
     try:
         out.write(bytearray(json.dumps(obj).encode()))
@@ -173,7 +163,7 @@ def _fs_write_json(spark: SparkSession, path: str, obj: dict) -> None:
 
 
 def _fs_delete(spark: SparkSession, path: str) -> None:
-    fs, p = _hadoop_fs(spark, path)
+    fs, p = hadoop_fs(spark, path)
     if fs.exists(p):
         fs.delete(p, False)
 
@@ -193,7 +183,7 @@ def _input_content_fingerprint(spark: SparkSession, name: str,
     try:
         for uri in sorted(df.inputFiles()):
             try:
-                fs, p = _hadoop_fs(spark, uri)
+                fs, p = hadoop_fs(spark, uri)
                 st = fs.getFileStatus(p)
                 files.append([uri, st.getLen(),
                               st.getModificationTime()])
@@ -240,7 +230,7 @@ class Pipeline:
             force: bool = False) -> dict[str, DataFrame]:
         from nobletools_spark.session import local_table
 
-        fs, root = _hadoop_fs(spark, self.out_dir)
+        fs, root = hadoop_fs(spark, self.out_dir)
         fs.mkdirs(root)
         run_id = uuid.uuid4().hex[:12]
         results: dict[str, DataFrame] = dict(inputs)

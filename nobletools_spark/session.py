@@ -109,6 +109,18 @@ def package_zip_path() -> str:
     return out
 
 
+def hadoop_fs(spark, path: str):
+    """(FileSystem, Path) for ``path`` via the JVM Hadoop FS API — the
+    same resolution Spark's own readers and writers use, so local, HDFS
+    and S3A paths all resolve alike (pipeline manifests land on the
+    SAME filesystem as the stage parquet, not the driver's local
+    disk)."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs, p
+
+
 def ship_package(spark) -> None:
     """Make nobletools_spark importable on executors (--py-files analog)."""
     sc = spark.sparkContext

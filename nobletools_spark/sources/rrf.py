@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from nobletools_spark.session import hadoop_fs
+
 MRCONSO_MIN_COLS = 17
 BROADER_RELS = {"RB", "PAR"}   # cui2 is broader than cui1 → edge cui1→cui2
 NARROWER_RELS = {"RN", "CHD"}  # inverse edge cui2→cui1
@@ -41,6 +43,11 @@ def _read_rrf(spark: SparkSession, path: str, n_cols: int) -> DataFrame:
     Explicit schema (all strings) — no inference pass over the file."""
     schema = ", ".join(f"_c{i} string" for i in range(n_cols))
     return spark.read.csv(path, sep="|", schema=schema, header=False)
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    fs, p = hadoop_fs(spark, path)
+    return fs.exists(p)
 
 
 def load_rrf(spark: SparkSession, rrf_dir: str,
@@ -195,16 +202,13 @@ def load_rrf(spark: SparkSession, rrf_dir: str,
              .join(relations.select(F.col("parent").alias("cui")).distinct(),
                    "cui", "left_semi"))
 
-    defs_df = None
-    try:
+    # MRDEF and MRSAB are optional: one FileSystem.exists check each
+    defs_df = sab_df = None
+    if _exists(spark, f"{rrf_dir}/MRDEF.RRF"):
         defs_df = (_read_rrf(spark, f"{rrf_dir}/MRDEF.RRF", 6)
                    .select(F.col("_c0").alias("cui"), F.col("_c4").alias("sab"),
                            F.col("_c5").alias("definition")))
-    except Exception:  # MRDEF is optional
-        pass
-
-    sab_df = None
-    try:
+    if _exists(spark, f"{rrf_dir}/MRSAB.RRF"):
         # the reference's (quirky) field mapping, reproduced as-is:
         # Source.description = fields[4] (SON, the human-readable
         # source name) and Source.name = fields[23]
@@ -217,8 +221,6 @@ def load_rrf(spark: SparkSession, rrf_dir: str,
                           F.col("_c4").alias("description")))
         if source_filter:
             sab_df = sab_df.filter(F.col("sab").isin(*source_filter))
-    except Exception:  # MRSAB is optional
-        pass
 
     out = {"concepts": concepts, "semtypes": sty, "relations": relations,
            "roots": roots}

@@ -793,7 +793,7 @@ def test_media_adjacent_concept_edges(spark):
 
 
 def test_sample_frames_rejects_degenerate_params(spark):
-    """every_ms <= 0 would spin the timed-frame catch-up loop forever
+    """every_ms <= 0 would fail or degenerate the timed-frame target
     inside an executor; max_frames < 1 would ZeroDivisionError in the
     stub path — both rejected loudly on the driver."""
     import pytest

@@ -221,6 +221,35 @@ def test_parse_mp4_round_trips_arbitrary_samples(frames, timescale, delta):
     assert times == [i * delta * 1000 // timescale for i in range(n)]
 
 
+def _pick_timed_frames_stepwise(times_ms, frames, every_ms, max_frames):
+    """The stepwise catch-up loop _pick_timed_frames replaced."""
+    out, target = [], 0
+    for src_i, (ts, fr) in enumerate(zip(times_ms, frames)):
+        if len(out) >= max_frames:
+            break
+        if ts >= target:
+            out.append((src_i, fr, ts))
+            while target <= ts:
+                target += every_ms
+    return out
+
+
+@given(st.lists(st.integers(min_value=0, max_value=5_000), max_size=30),
+       st.integers(min_value=1, max_value=700),
+       st.integers(min_value=1, max_value=8))
+@settings(max_examples=200, deadline=None)
+def test_pick_timed_frames_closed_form_matches_stepwise(times, every_ms,
+                                                        max_frames):
+    """The closed-form next target picks exactly the frames the
+    stepwise catch-up loop picked, on sorted and unsorted timestamps."""
+    from nobletools_spark.operators.multimodal import _pick_timed_frames
+
+    frames = [bytes([i % 256]) for i in range(len(times))]
+    for ts in (times, sorted(times)):
+        assert _pick_timed_frames(ts, frames, every_ms, max_frames) == \
+            _pick_timed_frames_stepwise(ts, frames, every_ms, max_frames)
+
+
 @given(st.lists(st.binary(min_size=1, max_size=32), min_size=1,
                 max_size=20),
        st.integers(min_value=1, max_value=5_000),

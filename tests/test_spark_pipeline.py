@@ -117,20 +117,90 @@ def test_semtype_triples(spark):
     assert ("C013", "has-semantic-type", "T191") in [tuple(r) for r in rows]
 
 
+def _assert_same_index(a, b):
+    """Every TerminologyIndex field equal, dict iteration order too."""
+    import dataclasses
+
+    for f in dataclasses.fields(a):
+        x, y = getattr(a, f.name), getattr(b, f.name)
+        assert x == y, f.name
+        if isinstance(x, dict):
+            assert list(x) == list(y), f.name
+
+
+# Out of cui order on purpose; SHARED is a code of two concepts (the
+# cui-sorted first wins), MM and BCC are acronyms, /.../ are regex
+# synonyms. The 300 filler concepts make 'tumor' hot enough (> 100
+# terms over > 500 words) for a non-empty blacklist.
+INDEX_PIN_CONCEPTS = [
+    {"cui": "C9", "name": "Melanoma",
+     "synonyms": ("Melanoma", "Malignant Melanoma", "MM"),
+     "semtypes": ("T191",), "sources": ("TST", "ALT"),
+     "codes": (("TST", "X9"), ("ALT", "SHARED"))},
+    {"cui": "C3", "name": "Nevus",
+     "synonyms": ("Nevus", "/nev[iu]s/", "/moles?/"),
+     "semtypes": ("T191",), "sources": ("ALT",),
+     "codes": (("ALT", "SHARED"), ("ALT", "X3"))},
+    {"cui": "C5", "name": "Basal cell carcinoma",
+     "synonyms": ("Basal cell carcinoma", "BCC", r"/b\.?c\.?c/"),
+     "semtypes": ("T191",), "sources": ("TST",),
+     "codes": (("TST", "X5"),)},
+] + [{"cui": f"F{i:03d}", "name": f"tumor alpha{i}",
+      "synonyms": (f"beta{i} tumor",), "semtypes": ("T191",),
+      "sources": ("TST",), "codes": ()} for i in range(299, -1, -1)]
+
+
 def test_build_index_df_matches_local(spark):
-    df = spark.createDataFrame(
-        [(c["cui"], c["name"], list(c["synonyms"]), list(c["semtypes"]),
-          list(c["sources"])) for c in PYTEST_CONCEPTS],
-        "cui string, name string, synonyms array<string>, "
-        "semtypes array<string>, sources array<string>")
-    a = build_index_df(spark, df)
-    b = build_index(PYTEST_CONCEPTS)
-    assert a.term_cuis == b.term_cuis
-    assert {w: set(t) for w, t in a.word_terms.items()} == \
-           {w: set(t) for w, t in b.word_terms.items()}
-    assert a.word_term_count == b.word_term_count
-    assert set(a.regex_terms) == set(b.regex_terms)
-    assert set(a.concepts) == set(b.concepts)
+    """build_index_df is build_index over the cui-sorted records: every
+    field, code_map, dict order, regex order and ConceptMeta.codes, for
+    the default and the compact + blacklist build."""
+    from nobletools_spark.sources.obo import concepts_df_from_records
+
+    df = concepts_df_from_records(spark, INDEX_PIN_CONCEPTS)
+    records = sorted(INDEX_PIN_CONCEPTS, key=lambda c: c["cui"])
+    for kw in ({}, {"compact": True, "blacklist": True}):
+        a = build_index_df(spark, df, **kw)
+        _assert_same_index(a, build_index(records, **kw))
+        assert a.code_map["SHARED"] == "C3"
+        assert a.concepts["C9"].codes == (("TST", "X9"), ("ALT", "SHARED"))
+        assert [cui for _p, cui in a.regex_terms] == ["C5", "C3", "C3"]
+        assert bool(a.blacklist) == bool(kw)
+
+
+def test_build_index_df_rrf_matches_local(spark, tmp_path):
+    """The RRF path: build_index_df over concepts_for_index(load_rrf)
+    equals build_index over the same table collected as Rows. The
+    fixture has no MRDEF/MRSAB, so those optional tables are absent."""
+    from nobletools_spark.sources.rrf import (
+        concepts_for_index,
+        conso_row,
+        load_rrf,
+        sty_row,
+        write_fixture_rrf,
+    )
+
+    write_fixture_rrf(
+        str(tmp_path),
+        mrconso=[
+            conso_row("C0000002", "Neoplasm", code="SHARED"),
+            conso_row("C0000001", "Melanoma", code="M-1"),
+            conso_row("C0000001", "MM", ts="S", ispref="N", sab="ALT",
+                      tty="AB", code="SHARED"),
+            conso_row("C0000003", "/moles?/", sab="ALT"),
+        ],
+        mrsty=[sty_row("C0000001", "T191", "Neoplastic Process")],
+        mrrel=[])
+    tables = load_rrf(spark, str(tmp_path))
+    assert "definitions" not in tables and "sources" not in tables
+    df = concepts_for_index(tables)
+    records = sorted(({**r.asDict(),
+                       "codes": [(c.sab, c.code) for c in r.codes]}
+                      for r in df.collect()), key=lambda c: c["cui"])
+    for kw in ({}, {"compact": True, "blacklist": True}):
+        a = build_index_df(spark, df, **kw)
+        _assert_same_index(a, build_index(records, **kw))
+        assert a.code_map["SHARED"] == "C0000001"
+        assert a.regex_terms == ((r"\b(moles?)\b", "C0000003"),)
 
 
 def test_annotate_plan_is_map_only(spark, corpus):
