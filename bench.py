@@ -4,15 +4,13 @@ JSON line: {"metric", "value", "unit", "queries", "sf", ...}.
 
 Each query is forced end-to-end with the noop sink (full execution, no
 driver collect). The KG pipeline additionally reports docs/sec and
-triples/sec — the north-rule throughput numbers. Run
-tools/bench_scaling.py for the N-vs-4N-cores scaling-efficiency report.
+triples/sec — the north-rule throughput numbers.
 
 De-noising (r2 task #6, tightened r4 per r3 verdict #6): sandbox CPU
 delivery swings 3-8× between phases, so a single pass per query
 confounds plan quality with host phase. The harness runs SWEEPS full
-passes over the query list in alternating order (the
-tools/bench_scaling.py protocol) and reports the per-query minimum.
-Queries whose best-3-sample spread still exceeds
+passes over the query list in alternating order and reports the
+per-query minimum. Queries whose best-3-sample spread still exceeds
 $SPARK_GRAFT_BENCH_SPREAD_THRESH (default 3×) get up to
 $SPARK_GRAFT_BENCH_EXTRA (default 3) adaptive extra passes, rotated
 across the noisy queries so a throttled host phase can't dominate one

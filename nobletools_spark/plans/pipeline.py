@@ -1,6 +1,6 @@
-"""Checkpoint-resumable staged pipeline with per-partition lineage and
-per-stage metrics tables (north_rule: "resumable from checkpoint with
-per-partition lineage + metrics").
+"""Checkpoint-resumable staged pipeline with per-stage lineage totals
+and metrics tables (north_rule: "resumable from checkpoint with lineage
++ metrics").
 
 The reference resumes its terminology import at row granularity by
 persisting per-file offsets (ConceptImporter.java:781-795,901 —
@@ -13,20 +13,29 @@ checkpoint — on a cluster these are Iceberg snapshots and the manifest
 is the snapshot id). Stage skipping makes a killed 10-hour job resume at
 the last completed stage.
 
-Three tables under <out_dir>:
+Like the reference's offsets, the bookkeeping rides on the work: each
+computed stage is ONE Spark job. The stage write carries an observed
+aggregate (row count + order-insensitive bit_xor of row hashes), so the
+totals come from the write itself, not from a re-scan; they go into the
+stage manifest, which is written through the Hadoop FS API (no job).
+
+Under <out_dir>:
 - <stage>/            — the stage output (parquet; Iceberg in prod)
+- <stage>.manifest.json — fingerprint, run_id, schema and the write's
+  observed totals (rows, checksum); ``verify_lineage`` re-aggregates
+  the stored parquet against them, so silent corruption or loss of a
+  part file is detectable
 - _metrics/           — one row per stage run: (run_id, stage, status ∈
   computed|resumed, rows, wall_s, input_fingerprint, ts)
-- _lineage/           — one row per OUTPUT PARTITION per computed stage:
-  (run_id, stage, part_id, rows, checksum) — checksum is an
-  order-insensitive bit_xor of row hashes, so any silent partition
-  corruption or loss is detectable by re-running the lineage scan.
+- _lineage/           — one row per computed stage: (run_id, stage,
+  part_id, rows, checksum), part_id NULL (the schema keeps the column
+  from the older per-partition grain, so appends into an existing
+  out_dir stay compatible). Both tables are appended once per run.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -197,21 +206,29 @@ def _input_content_fingerprint(spark: SparkSession, name: str,
             "schema": df.schema.simpleString()}
 
 
-def partition_lineage(df: DataFrame) -> DataFrame:
-    """(part_id, rows, checksum) per partition — checksum =
-    bit_xor(xxhash64(all columns)), order-insensitive within and across
-    partitions so it is stable under shuffle reordering."""
+def _totals(schema) -> list:
+    """(rows, checksum) aggregates over a table of ``schema`` —
+    checksum = bit_xor(xxhash64(row)), order-insensitive, 0 when empty.
+    The row hash takes the columns sorted by name, because a
+    ``partitionBy`` write moves the partition columns to the end on
+    read-back; maps hash as their JSON (xxhash64 forbids MAP inputs)."""
     from pyspark.sql.types import MapType
 
     cols = [F.to_json(F.col(f.name)) if isinstance(f.dataType, MapType)
             else F.col(f.name)
-            for f in df.schema.fields]  # xxhash64 forbids MAP inputs
-    return (df
-            .select(F.spark_partition_id().alias("part_id"),
-                    F.xxhash64(*cols).alias("h"))
-            .groupBy("part_id")
-            .agg(F.count("*").alias("rows"),
-                 F.expr("bit_xor(h)").alias("checksum")))
+            for f in sorted(schema.fields, key=lambda f: f.name)]
+    return [F.count(F.lit(1)).alias("rows"),
+            F.coalesce(F.bit_xor(F.xxhash64(*cols)),
+                       F.lit(0)).alias("checksum")]
+
+
+def partition_lineage(df: DataFrame) -> DataFrame:
+    """(part_id, rows, checksum) per partition, with the ``_totals``
+    aggregates: order-insensitive within and across partitions, so the
+    bit_xor of the partition checksums is stable under shuffle
+    reordering and equals the whole table's checksum."""
+    return (df.groupBy(F.spark_partition_id().alias("part_id"))
+            .agg(*_totals(df.schema)))
 
 
 class Pipeline:
@@ -228,6 +245,20 @@ class Pipeline:
     def run(self, spark: SparkSession, inputs: dict[str, DataFrame],
             run_config: dict | None = None,
             force: bool = False) -> dict[str, DataFrame]:
+        """Run every stage, resuming those whose manifest matches.
+
+        Crash consistency: a stage is complete once its manifest exists
+        (it is written right after the stage parquet, and carries the
+        write's totals), so a killed run resumes at the first stage
+        without one. The ``_metrics`` and ``_lineage`` rows of every
+        stage this run finished are appended once, from a ``finally``
+        block — a stage that raises still leaves the rows of the stages
+        before it.
+
+        In-memory inputs (no backing files) fingerprint by schema only:
+        bump ``run_config`` when their data changes."""
+        from pyspark.sql import Observation
+
         from nobletools_spark.session import local_table
 
         fs, root = hadoop_fs(spark, self.out_dir)
@@ -235,117 +266,101 @@ class Pipeline:
         run_id = uuid.uuid4().hex[:12]
         results: dict[str, DataFrame] = dict(inputs)
         self.reports = []
+        lineage: list[tuple] = []
+        metrics: list[tuple] = []
         upstream_fp = _fingerprint({
             "config": run_config or {},
             "inputs": [_input_content_fingerprint(spark, n, inputs[n])
                        for n in sorted(inputs)]})
-        for st in self.stages:
-            path = f"{self.out_dir}/{st.name}"
-            mpath = self._manifest_path(st.name)
-            # fingerprint chains: a stage is resumable only if its
-            # config, params, the input-table set, AND every upstream
-            # stage fingerprint are unchanged
-            payload = {"stage": st.name, "upstream": upstream_fp}
-            if st.params:
-                payload["params"] = st.params
-            fp = _fingerprint(payload)
-            t0 = time.perf_counter()
-            manifest = None if force else _fs_read_json(spark, mpath)
-            if manifest is not None and manifest.get("fingerprint") == fp:
-                # empty stages can leave a part-file-less dir (AQE may
-                # coalesce 0 rows to 0 tasks) — the manifest carries the
-                # schema so read-back never has to infer one
-                reader = spark.read
-                if manifest.get("schema"):
-                    from pyspark.sql.types import StructType
-                    reader = reader.schema(
-                        StructType.fromJson(json.loads(manifest["schema"])))
-                df = reader.parquet(path)
-                report = StageReport(st.name, "resumed", manifest["rows"],
+        try:
+            for st in self.stages:
+                path = f"{self.out_dir}/{st.name}"
+                mpath = self._manifest_path(st.name)
+                # fingerprint chains: a stage is resumable only if its
+                # config, params, the input-table set, AND every
+                # upstream stage fingerprint are unchanged
+                payload = {"stage": st.name, "upstream": upstream_fp}
+                if st.params:
+                    payload["params"] = st.params
+                fp = _fingerprint(payload)
+                t0 = time.perf_counter()
+                manifest = None if force else _fs_read_json(spark, mpath)
+                if manifest is not None and manifest.get("fingerprint") == fp:
+                    df = self._read_stage(spark, st.name, manifest)
+                    status, rows = "resumed", manifest["rows"]
+                else:
+                    # drop the stale manifest FIRST: a crash
+                    # mid-overwrite must leave an unresumable stage, not
+                    # a surviving manifest pointing at partial parquet
+                    _fs_delete(spark, mpath)
+                    df = st.fn(spark, results)
+                    schema = df.schema
+                    obs = Observation(f"{st.name}-{run_id}")
+                    writer = (df.observe(obs, *_totals(schema))
+                              .write.mode("overwrite"))
+                    if st.partition_by:
+                        writer = writer.partitionBy(*st.partition_by)
+                    writer.parquet(path)
+                    totals = obs.get
+                    rows, checksum = totals["rows"], totals["checksum"]
+                    manifest = {"fingerprint": fp, "rows": rows,
+                                "checksum": checksum, "run_id": run_id,
+                                "schema": json.dumps(schema.jsonValue())}
+                    _fs_write_json(spark, mpath, manifest)
+                    df = self._read_stage(spark, st.name, manifest)
+                    status = "computed"
+                    lineage.append((None, rows, checksum, run_id, st.name))
+                report = StageReport(st.name, status, rows,
                                      round(time.perf_counter() - t0, 4))
-            else:
-                # drop the stale manifest FIRST: a crash mid-overwrite
-                # must leave an unresumable stage, not a surviving
-                # manifest pointing at partial parquet
-                _fs_delete(spark, mpath)
-                df = st.fn(spark, results)
-                schema = df.schema
-                writer = df.write.mode("overwrite")
-                if st.partition_by:
-                    writer = writer.partitionBy(*st.partition_by)
-                writer.parquet(path)
-                # read back with the EXPLICIT schema: an empty stage
-                # (legit — e.g. a terminology disjoint from the corpus)
-                # can write zero part files, which plain read cannot
-                # infer a schema from
-                df = spark.read.schema(schema).parquet(path)
-                # ONE scan: the per-partition lineage rows also carry
-                # the row counts (partition-count-sized collect)
-                lin = partition_lineage(df).collect()
-                rows = sum(r["rows"] for r in lin)
-                local_table(
-                    spark,
-                    [(r["part_id"], r["rows"], r["checksum"],
-                      run_id, st.name) for r in lin],
-                    "part_id int, rows long, checksum long, "
-                    "run_id string, stage string"
-                ).write.mode("append").parquet(f"{self.out_dir}/_lineage")
-                _fs_write_json(spark, mpath,
-                               {"fingerprint": fp, "rows": rows,
-                                "run_id": run_id,
-                                "schema": json.dumps(schema.jsonValue())})
-                report = StageReport(st.name, "computed", rows,
-                                     round(time.perf_counter() - t0, 4))
-            results[st.name] = df
-            self.reports.append(report)
-            # per-stage append: a killed run keeps the metrics rows of
-            # every stage it finished (crash-consistent, like _lineage)
-            local_table(
-                spark,
-                [(run_id, st.name, report.status, report.rows,
-                  report.wall_s, fp, int(time.time()))],
-                "run_id string, stage string, status string, rows long, "
-                "wall_s double, input_fingerprint string, ts long"
-            ).write.mode("append").parquet(f"{self.out_dir}/_metrics")
-            upstream_fp = fp
+                results[st.name] = df
+                self.reports.append(report)
+                metrics.append((run_id, st.name, status, rows,
+                                report.wall_s, fp, int(time.time())))
+                upstream_fp = fp
+        finally:
+            for table, rows, ddl in (
+                    ("_lineage", lineage, "part_id int, rows long, "
+                     "checksum long, run_id string, stage string"),
+                    ("_metrics", metrics, "run_id string, stage string, "
+                     "status string, rows long, wall_s double, "
+                     "input_fingerprint string, ts long")):
+                if rows:
+                    local_table(spark, rows, ddl).write.mode(
+                        "append").parquet(f"{self.out_dir}/{table}")
         return results
 
-    def verify_lineage(self, spark: SparkSession, stage: str) -> bool:
-        """Recompute the per-partition checksums of a stage's stored
-        output and compare the total against the recorded lineage —
-        detects bit-rot / partial overwrite between runs. The _lineage
-        table is append-only across runs, so only the rows from the run
-        that actually produced the current stage parquet (the run_id in
-        the stage manifest) are compared — summing across runs would
-        falsely report corruption after any recompute into the same
-        out_dir."""
-        manifest = _fs_read_json(spark, self._manifest_path(stage))
-        if manifest is None:
-            return False  # crashed before/while writing the manifest
-        run_id = manifest.get("run_id")
-        if run_id is None:
-            return False  # pre-run_id manifest (older layout): can't
-            # attribute lineage rows to the producing run — report
-            # unverified instead of raising
-        # manifest schema: a legitimately-empty stage can have zero
-        # part files (schemaless read would raise instead of verifying)
+    def _read_stage(self, spark: SparkSession, stage: str,
+                    manifest: dict) -> DataFrame:
+        """Read a stage's parquet with the manifest's schema: an empty
+        stage (legit — e.g. a terminology disjoint from the corpus) can
+        leave a dir without part files (AQE may coalesce 0 rows to 0
+        tasks), which a schemaless read cannot infer a schema from."""
         reader = spark.read
         if manifest.get("schema"):
             from pyspark.sql.types import StructType
+
             reader = reader.schema(
                 StructType.fromJson(json.loads(manifest["schema"])))
-        df = reader.parquet(f"{self.out_dir}/{stage}")
-        now = partition_lineage(df).agg(
-            F.sum("rows").alias("rows"),
-            F.expr("bit_xor(checksum)").alias("checksum")).collect()[0]
-        rec = (spark.read.parquet(f"{self.out_dir}/_lineage")
-               .filter((F.col("stage") == stage)
-                       & (F.col("run_id") == run_id))
-               .agg(F.sum("rows").alias("rows"),
-                    F.expr("bit_xor(checksum)").alias("checksum"))
+        return reader.parquet(f"{self.out_dir}/{stage}")
+
+    def verify_lineage(self, spark: SparkSession, stage: str) -> bool:
+        """Re-aggregate a stage's stored output and compare its row
+        count and checksum with the totals its write recorded in the
+        manifest — detects bit-rot / partial overwrite / a lost part
+        file between runs."""
+        manifest = _fs_read_json(spark, self._manifest_path(stage))
+        if manifest is None:
+            return False  # crashed before/while writing the manifest
+        if "checksum" not in manifest:
+            return False  # older layout (totals lived in _lineage):
+            # report unverified instead of raising
+        now = (partition_lineage(self._read_stage(spark, stage, manifest))
+               .agg(F.coalesce(F.sum("rows"), F.lit(0)).alias("rows"),
+                    F.coalesce(F.bit_xor("checksum"), F.lit(0))
+                    .alias("checksum"))
                .collect()[0])
-        return (now["rows"] == rec["rows"]
-                and now["checksum"] == rec["checksum"])
+        return (now["rows"] == manifest["rows"]
+                and now["checksum"] == manifest["checksum"])
 
 
 def kg_stages(index, context=None, cfg=None,
@@ -467,8 +482,10 @@ def kg_stages(index, context=None, cfg=None,
 
     def s_cooccurrence(spark, r):
         if not incremental:
+            # no cache: the input is stage parquet, and a persisted
+            # projection would outlive the run (one per Pipeline.run)
             return cooccurrence_triples(gate(r["mentions"]),
-                                        cooccurrence_salt)
+                                        cooccurrence_salt, cache=False)
         # delta aggregation (incremental-view maintenance): derive the
         # row deltas from ALREADY-MATERIALIZED tables — this run's
         # mentions/doc_fp stage parquet and the previous run's state —
@@ -603,7 +620,7 @@ def prep_stages(*, filter_kw: dict | None = None,
     Every stage materializes a (doc_id, text) corpus snapshot (plus the
     decision/sample side tables), so a killed multi-day prep job
     resumes at the last completed stage with the same
-    manifest-fingerprint + per-partition-lineage machinery as
+    manifest-fingerprint + lineage-totals machinery as
     kg_stages. The optional stages join in when ``benchmark_texts``
     (13-gram decontamination) / ``budgets`` (token-budget mixture
     sampling) are provided; they sit before chunking so the chunk

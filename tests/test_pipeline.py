@@ -165,6 +165,171 @@ def test_verify_lineage_missing_manifest_returns_false(spark, tmp_path):
     assert pipe.verify_lineage(spark, "mentions") is True
 
 
+def _readback_totals(df):
+    """Row count and bit_xor of row hashes over the stored parquet, the
+    columns in sorted-name order and maps as JSON (0 when empty)."""
+    from pyspark.sql.types import MapType
+
+    cols = [F.to_json(F.col(f.name)) if isinstance(f.dataType, MapType)
+            else F.col(f.name)
+            for f in sorted(df.schema.fields, key=lambda f: f.name)]
+    r = df.agg(F.count(F.lit(1)).alias("rows"),
+               F.bit_xor(F.xxhash64(*cols)).alias("checksum")).collect()[0]
+    return r["rows"], r["checksum"] or 0
+
+
+def _manifest(out, stage):
+    import json
+
+    with open(f"{out}/{stage}.manifest.json") as f:
+        return json.load(f)
+
+
+def test_manifest_totals_equal_readback(spark, tmp_path):
+    """Every stage's manifest carries the totals observed on its write,
+    and they equal an aggregate over the stored parquet — including the
+    MapType modifiers column (ConText on) and the partitionBy("pred")
+    triples stage, whose read-back moves pred to the end."""
+    from nobletools_spark.operators.context import default_context_index
+    from nobletools_spark.sources.fixtures import rich_corpus_df
+
+    out = str(tmp_path / "kg")
+    docs = rich_corpus_df(spark, 40, seed=7)
+    edges = spark.createDataFrame(list(PYTEST_ISA_EDGES),
+                                  "cui string, parent string")
+    pipe = Pipeline(out, kg_stages(pytest_index(), cfg=MatchConfig(),
+                                   context=default_context_index(),
+                                   asserted=True))
+    res = pipe.run(spark, {"documents": docs, "isa_edges": edges})
+    assert "modifiers" in res["mentions"].columns
+    assert res["triples"].columns[-1] == "pred"
+    for r in pipe.reports:
+        m = _manifest(out, r.stage)
+        assert m["rows"] == r.rows > 0
+        assert (m["rows"], m["checksum"]) == _readback_totals(
+            res[r.stage]), r.stage
+        assert pipe.verify_lineage(spark, r.stage), r.stage
+    # one _lineage row per computed stage, totals as in the manifest
+    lin = spark.read.parquet(f"{out}/_lineage").collect()
+    assert sorted((r.stage, r.rows, r.checksum) for r in lin) == sorted(
+        (r.stage, _manifest(out, r.stage)["rows"],
+         _manifest(out, r.stage)["checksum"]) for r in pipe.reports)
+    assert all(r.part_id is None for r in lin)
+
+
+def test_empty_stage_records_zero_and_verifies(spark, tmp_path):
+    """A terminology disjoint from the corpus: the mention stages are
+    empty, record rows == 0, and still verify."""
+    from nobletools_spark.sources.fixtures import builtin_index
+
+    out = str(tmp_path / "kg_empty")
+    docs = synthetic_corpus_df(spark, 10, seed=7)
+    pipe = Pipeline(out, kg_stages(builtin_index()))
+    pipe.run(spark, {"documents": docs})
+    rows = {r.stage: r.rows for r in pipe.reports}
+    assert rows["mentions"] == rows["triples"] == 0
+    assert rows["doc_fp"] == 10
+    for stage in rows:
+        assert _manifest(out, stage)["rows"] == rows[stage]
+        assert pipe.verify_lineage(spark, stage), stage
+
+
+def test_verify_lineage_detects_lost_part_file(spark, tmp_path):
+    out = str(tmp_path / "kg_lost")
+    docs = synthetic_corpus_df(spark, 20, seed=7)
+    pipe = Pipeline(out, kg_stages(pytest_index(), cfg=MatchConfig()))
+    pipe.run(spark, {"documents": docs}, run_config={"v": 1})
+    assert pipe.verify_lineage(spark, "triples")
+    part = next(os.path.join(d, f)
+                for d, _, fs in sorted(os.walk(f"{out}/triples"))
+                for f in sorted(fs) if f.startswith("part-"))
+    os.remove(part)
+    assert pipe.verify_lineage(spark, "triples") is False
+    assert pipe.verify_lineage(spark, "mentions") is True
+
+
+def test_verify_lineage_old_manifest_layout_returns_false(spark, tmp_path):
+    """A manifest without totals (the layout from before they moved
+    out of _lineage) reports unverified instead of raising."""
+    import json
+
+    out = str(tmp_path / "kg_old")
+    docs = synthetic_corpus_df(spark, 10, seed=7)
+    pipe = Pipeline(out, kg_stages(pytest_index(), cfg=MatchConfig()))
+    pipe.run(spark, {"documents": docs}, run_config={"v": 1})
+    m = _manifest(out, "triples")
+    del m["checksum"]
+    with open(f"{out}/triples.manifest.json", "w") as f:
+        json.dump(m, f)
+    os.remove(f"{out}/.triples.manifest.json.crc")  # stale after edit
+    assert pipe.verify_lineage(spark, "triples") is False
+
+
+def test_crash_keeps_finished_stages_and_bookkeeping(spark, tmp_path):
+    """The third stage raises: the first two keep verified manifests,
+    the finally block still appends their _metrics/_lineage rows, and a
+    rerun resumes them."""
+    from dataclasses import replace
+
+    out = str(tmp_path / "kg_crash")
+    docs = synthetic_corpus_df(spark, 20, seed=7)
+    stages = kg_stages(pytest_index(), cfg=MatchConfig())
+
+    def boom(spark, r):
+        raise RuntimeError("stage failed")
+
+    crashing = stages[:2] + [replace(stages[2], fn=boom)] + stages[3:]
+    with pytest.raises(RuntimeError, match="stage failed"):
+        Pipeline(out, crashing).run(spark, {"documents": docs},
+                                    run_config={"v": 1})
+    done = [st.name for st in stages[:2]]
+    for stage in done:
+        assert Pipeline(out, stages).verify_lineage(spark, stage), stage
+    assert not os.path.exists(f"{out}/{stages[2].name}.manifest.json")
+    m = spark.read.parquet(f"{out}/_metrics").collect()
+    assert sorted(r.stage for r in m) == sorted(done)
+    lin = spark.read.parquet(f"{out}/_lineage").collect()
+    assert sorted(r.stage for r in lin) == sorted(done)
+    pipe = Pipeline(out, stages)
+    pipe.run(spark, {"documents": docs}, run_config={"v": 1})
+    statuses = {r.stage: r.status for r in pipe.reports}
+    assert [statuses[s] for s in done] == ["resumed", "resumed"]
+    assert statuses[stages[2].name] == "computed"
+
+
+def test_full_run_job_budget(spark, tmp_path):
+    """A full kg_stages run on the 60-doc fixture is one Spark job per
+    computed stage plus the stage operators' own jobs and the two
+    bookkeeping appends — a per-stage re-scan or append breaks this."""
+    sc = spark.sparkContext
+    docs = synthetic_corpus_df(spark, 60, seed=7)
+    edges = spark.createDataFrame(list(PYTEST_ISA_EDGES),
+                                  "cui string, parent string")
+    pipe = Pipeline(str(tmp_path / "kg_jobs"),
+                    kg_stages(pytest_index(), cfg=MatchConfig()))
+    group = f"job-budget-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        pipe.run(spark, {"documents": docs, "isa_edges": edges},
+                 run_config={"corpus": "test60"})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert all(r.status == "computed" for r in pipe.reports)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 14
+
+
+def test_pipeline_runs_leave_no_persisted_rdds(spark, tmp_path):
+    sc = spark.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    docs = synthetic_corpus_df(spark, 20, seed=7)
+    for i in range(2):
+        Pipeline(str(tmp_path / f"kg{i}"),
+                 kg_stages(pytest_index(), cfg=MatchConfig())).run(
+            spark, {"documents": docs}, run_config={"v": i})
+    assert sc._jsc.getPersistentRDDs().size() == before
+
+
 def test_template_extraction_stage(spark, tmp_path):
     """kg_stages(templates_df=...) adds a resumable item_instances
     stage after mentions: extraction output persists, resumes, and

@@ -2,7 +2,7 @@
 pipeline: quality filter → C4 line dedup → MinHash near-dedup →
 [13-gram decontamination] → [token-budget mixture] → chunking
 [→ top-k vocabulary] [→ sequence packing], every stage
-checkpoint-resumable with per-partition lineage (same machinery as
+checkpoint-resumable with lineage totals (same machinery as
 the KG pipeline).
 
     zip -r nobletools_spark.zip nobletools_spark
