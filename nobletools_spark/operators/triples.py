@@ -13,8 +13,9 @@ Predicates:
 Scale notes: the co-occurrence aggregation is the one corpus-sized
 shuffle in the pipeline; hot concepts (Zipf skew) are handled by an
 explicit two-phase salted aggregation (partial per (pair, salt), final
-over pair) plus AQE skew handling. The isa closure shuffles only the
-terminology-sized edge table (bounded ≤7 self-joins).
+over pair) plus AQE skew handling. The isa closure is a driver-side
+BFS over the terminology-sized edge table; only above 100k edges does
+it shuffle (bounded ≤7 self-joins).
 """
 
 from __future__ import annotations

@@ -30,7 +30,9 @@ Under <out_dir>:
 - _lineage/           — one row per computed stage: (run_id, stage,
   part_id, rows, checksum), part_id NULL (the schema keeps the column
   from the older per-partition grain, so appends into an existing
-  out_dir stay compatible). Both tables are appended once per run.
+  out_dir stay compatible). Both tables are appended once per run, one
+  parquet file each, written on the driver (the rows are already
+  there) through the Hadoop FS API — again no job.
 """
 
 from __future__ import annotations
@@ -147,6 +149,13 @@ def _df_digest(df) -> str:
 
 
 def _fs_read_json(spark: SparkSession, path: str) -> dict | None:
+    """A JSON sidecar (stage manifest, matcher state) read through the
+    Hadoop FS API. None when absent, and also when it fails its
+    checksum: a file edited outside Hadoop leaves its ``.crc`` sidecar
+    stale, and a manifest that cannot be trusted must make its stage
+    unverified and recomputed, not crash the run."""
+    from py4j.protocol import Py4JJavaError
+
     fs, p = hadoop_fs(spark, path)
     if not fs.exists(p):
         return None
@@ -157,18 +166,52 @@ def _fs_read_json(spark: SparkSession, path: str) -> dict | None:
         # string (commons-io ships with Spark)
         jvm = spark.sparkContext._jvm
         text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        return json.loads(text)
+    except Py4JJavaError as e:
+        if (e.java_exception.getClass().getName()
+                != "org.apache.hadoop.fs.ChecksumException"):
+            raise
+        return None
     finally:
         stream.close()
+    return json.loads(text)
 
 
-def _fs_write_json(spark: SparkSession, path: str, obj: dict) -> None:
+def _fs_write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
     fs, p = hadoop_fs(spark, path)
     out = fs.create(p, True)
     try:
-        out.write(bytearray(json.dumps(obj).encode()))
+        out.write(bytearray(data))
     finally:
         out.close()
+
+
+def _fs_write_json(spark: SparkSession, path: str, obj: dict) -> None:
+    _fs_write_bytes(spark, path, json.dumps(obj).encode())
+
+
+def _fs_append_parquet(spark: SparkSession, path: str, rows: list[tuple],
+                       schema) -> None:
+    """Append ``rows`` (a pyarrow ``schema``) to the parquet table at
+    ``path`` as one new file, encoded on the driver and written through
+    the Hadoop FS API — no Spark job for rows the driver already holds.
+    The file is written under a hidden name (readers skip ``.``-files)
+    and renamed into place, so a crash mid-write adds nothing a reader
+    would pick up."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    buf = io.BytesIO()
+    pq.write_table(pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(zip(*rows), schema)],
+        schema=schema), buf)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp, dst = f"{path}/.{name}.tmp", f"{path}/{name}"
+    _fs_write_bytes(spark, tmp, buf.getvalue())
+    fs, src = hadoop_fs(spark, tmp)
+    if not fs.rename(src, hadoop_fs(spark, dst)[1]):
+        raise OSError(f"could not rename {tmp} to {dst}")
 
 
 def _fs_delete(spark: SparkSession, path: str) -> None:
@@ -257,9 +300,8 @@ class Pipeline:
 
         In-memory inputs (no backing files) fingerprint by schema only:
         bump ``run_config`` when their data changes."""
+        import pyarrow as pa
         from pyspark.sql import Observation
-
-        from nobletools_spark.session import local_table
 
         fs, root = hadoop_fs(spark, self.out_dir)
         fs.mkdirs(root)
@@ -318,15 +360,18 @@ class Pipeline:
                                 report.wall_s, fp, int(time.time())))
                 upstream_fp = fp
         finally:
-            for table, rows, ddl in (
-                    ("_lineage", lineage, "part_id int, rows long, "
-                     "checksum long, run_id string, stage string"),
-                    ("_metrics", metrics, "run_id string, stage string, "
-                     "status string, rows long, wall_s double, "
-                     "input_fingerprint string, ts long")):
+            text, i32, i64 = pa.string(), pa.int32(), pa.int64()
+            for table, rows, schema in (
+                    ("_lineage", lineage, pa.schema([
+                        ("part_id", i32), ("rows", i64), ("checksum", i64),
+                        ("run_id", text), ("stage", text)])),
+                    ("_metrics", metrics, pa.schema([
+                        ("run_id", text), ("stage", text), ("status", text),
+                        ("rows", i64), ("wall_s", pa.float64()),
+                        ("input_fingerprint", text), ("ts", i64)]))):
                 if rows:
-                    local_table(spark, rows, ddl).write.mode(
-                        "append").parquet(f"{self.out_dir}/{table}")
+                    _fs_append_parquet(spark, f"{self.out_dir}/{table}",
+                                       rows, schema)
         return results
 
     def _read_stage(self, spark: SparkSession, stage: str,
@@ -420,9 +465,10 @@ def kg_stages(index, context=None, cfg=None,
                          "(the gate reads the modifiers map)")
     # assertion gate (asserted=True): only ConText-asserted mentions
     # (not negated / other-experiencer / hypothetical / hedged) become
-    # graph edges. Applied at every mention consumption downstream of
-    # the mentions stage — the mention TABLE itself keeps all rows with
-    # their modifiers, so the gate is a reversible materialization
+    # graph edges. Applied where mention_triples is built (full-mode
+    # co-occurrence reads that gated table) and to the incremental
+    # co-occurrence deltas — the mention TABLE itself keeps all rows
+    # with their modifiers, so the gate is a reversible materialization
     # choice, not data loss; prev-run rows in incremental mode carry
     # their modifiers through stage parquet and gate identically.
     gate = asserted_mentions if asserted else (lambda df: df)
@@ -482,10 +528,14 @@ def kg_stages(index, context=None, cfg=None,
 
     def s_cooccurrence(spark, r):
         if not incremental:
-            # no cache: the input is stage parquet, and a persisted
-            # projection would outlive the run (one per Pipeline.run)
-            return cooccurrence_triples(gate(r["mentions"]),
-                                        cooccurrence_salt, cache=False)
+            # pairs from the mention_triples stage parquet: it already
+            # is the gated, distinct (doc, cui) set, so no distinct
+            # shuffle re-runs over the mention rows (and, without one,
+            # no persisted projection outlives the run)
+            doc_cuis = r["mention_triples"].select(
+                F.col("subj").alias("doc_id"), F.col("obj").alias("cui"))
+            return cooccurrence_triples(doc_cuis, cooccurrence_salt,
+                                        assume_distinct=True)
         # delta aggregation (incremental-view maintenance): derive the
         # row deltas from ALREADY-MATERIALIZED tables — this run's
         # mentions/doc_fp stage parquet and the previous run's state —

@@ -168,25 +168,22 @@ def load_rrf(spark: SparkSession, rrf_dir: str,
     # rrf-hierarchy parity leg): an MRREL edge lands only when BOTH
     # endpoint concepts exist in the loaded map (which includes the SRC
     # atoms), and SRC-only↔SRC-only mappings are skipped as useless.
-    # All three frames are terminology-sized → broadcast.
-    loaded_cuis = conso.select("cui").distinct()
-    src_only = (conso.groupBy("cui")
-                .agg(F.max(F.when(F.col("sab") != "SRC", 1).otherwise(0))
-                     .alias("_non_src"))
-                .filter(F.col("_non_src") == 0).select("cui"))
-    relations = (relations
-                 .join(F.broadcast(loaded_cuis), "cui", "left_semi")
-                 .join(F.broadcast(loaded_cuis
-                                   .withColumnRenamed("cui", "parent")),
-                       "parent", "left_semi")
-                 .join(F.broadcast(src_only.withColumn("_s1", F.lit(1))),
-                       "cui", "left")
-                 .join(F.broadcast(src_only
-                                   .withColumnRenamed("cui", "parent")
-                                   .withColumn("_s2", F.lit(1))),
-                       "parent", "left")
-                 .filter(F.col("_s1").isNull() | F.col("_s2").isNull())
-                 .select("cui", "parent"))
+    # One aggregation over the loaded atoms answers both: its keys are
+    # the loaded CUIs, and ``_non_src`` is 0 for the SRC-only ones. It
+    # is terminology-sized → broadcast, and inner-joined (unique keys)
+    # at each endpoint as the SAME frame under two aliases, so both
+    # joins share one broadcast.
+    loaded = (conso.groupBy("cui")
+              .agg(F.max(F.when(F.col("sab") != "SRC", 1).otherwise(0))
+                   .alias("_non_src")))
+    own, par = loaded.alias("own"), loaded.alias("par")
+    relations = (relations.alias("r")
+                 .join(F.broadcast(own), F.col("r.cui") == F.col("own.cui"))
+                 .join(F.broadcast(par),
+                       F.col("r.parent") == F.col("par.cui"))
+                 .filter((F.col("own._non_src") == 1)
+                         | (F.col("par._non_src") == 1))
+                 .select("r.cui", "r.parent"))
     # root table (ConceptImporter.java:833 + :1169-1177): SRC atoms
     # whose code starts with V- are root CANDIDATES; a candidate is a
     # root iff some surviving edge points at it (it acquired a NARROWER

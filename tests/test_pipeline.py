@@ -299,8 +299,10 @@ def test_crash_keeps_finished_stages_and_bookkeeping(spark, tmp_path):
 
 def test_full_run_job_budget(spark, tmp_path):
     """A full kg_stages run on the 60-doc fixture is one Spark job per
-    computed stage plus the stage operators' own jobs and the two
-    bookkeeping appends — a per-stage re-scan or append breaks this."""
+    computed stage plus the stage operators' own jobs — a per-stage
+    re-scan, a bookkeeping append through Spark, or a co-occurrence
+    stage that re-runs the distinct (doc, cui) shuffle instead of
+    reading mention_triples breaks this."""
     sc = spark.sparkContext
     docs = synthetic_corpus_df(spark, 60, seed=7)
     edges = spark.createDataFrame(list(PYTEST_ISA_EDGES),
@@ -316,7 +318,68 @@ def test_full_run_job_budget(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert all(r.status == "computed" for r in pipe.reports)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 14
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 11
+
+
+def test_bookkeeping_append_reads_back_without_a_job(spark, tmp_path):
+    """_metrics/_lineage rows are encoded on the driver and written
+    through the Hadoop FS API: the append starts no Spark job, and
+    Spark reads the file back with the old Spark-written schema, next
+    to a file Spark appended itself (an out_dir from an older run)."""
+    import pyarrow as pa
+
+    from nobletools_spark.plans.pipeline import _fs_append_parquet
+    from nobletools_spark.session import local_table
+
+    path = str(tmp_path / "_lineage")
+    ddl = ("part_id int, rows long, checksum long, run_id string, "
+           "stage string")
+    local_table(spark, [(3, 1, 2, "old", "mentions")], ddl) \
+        .write.mode("append").parquet(path)
+    schema = pa.schema([("part_id", pa.int32()), ("rows", pa.int64()),
+                        ("checksum", pa.int64()), ("run_id", pa.string()),
+                        ("stage", pa.string())])
+    rows = [(None, 5, -(2 ** 62), "new", "mentions"),
+            (None, 0, 0, "new", "triples")]
+    sc = spark.sparkContext
+    group = f"append-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        _fs_append_parquet(spark, path, rows, schema)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert not [f for f in os.listdir(path) if ".tmp" in f]
+    back = spark.read.parquet(path)
+    assert back.schema.simpleString() == \
+        "struct<part_id:int,rows:bigint,checksum:bigint,run_id:string," \
+        "stage:string>"
+    assert sorted(map(tuple, back.collect()), key=str) == sorted(
+        [(3, 1, 2, "old", "mentions")] + rows, key=str)
+
+
+def test_manifest_failing_checksum_reads_as_absent(spark, tmp_path):
+    """A manifest rewritten outside Hadoop (its .crc sidecar left
+    stale) fails its checksum: verify_lineage reports False instead of
+    raising, and a rerun recomputes that stage and verifies it."""
+    import json
+
+    out = str(tmp_path / "kg_crc")
+    docs = synthetic_corpus_df(spark, 10, seed=7)
+    pipe = Pipeline(out, kg_stages(pytest_index(), cfg=MatchConfig()))
+    pipe.run(spark, {"documents": docs}, run_config={"v": 1})
+    m = _manifest(out, "triples")
+    with open(f"{out}/triples.manifest.json", "w") as f:
+        json.dump(m, f, indent=1)
+    assert os.path.exists(f"{out}/.triples.manifest.json.crc")
+    assert pipe.verify_lineage(spark, "triples") is False
+    assert pipe.verify_lineage(spark, "mentions") is True
+    pipe.run(spark, {"documents": docs}, run_config={"v": 1})
+    statuses = {r.stage: r.status for r in pipe.reports}
+    assert statuses["triples"] == "computed"
+    assert statuses["mentions"] == "resumed"
+    assert pipe.verify_lineage(spark, "triples")
 
 
 def test_pipeline_runs_leave_no_persisted_rdds(spark, tmp_path):

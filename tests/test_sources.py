@@ -197,6 +197,39 @@ def test_load_rrf_edge_filters_and_roots(spark, tmp_path):
     assert {r["cui"] for r in t["roots"].collect()} == {"C900"}
 
 
+def test_rrf_relations_aggregate_mrconso_once(spark, tmp_path):
+    """The both-endpoints check and the SRC-only skip share one MRCONSO
+    aggregation, broadcast once to both endpoint joins: collecting the
+    edge table (what the isa closure probe does on every run) starts
+    at most 4 Spark jobs — the MRREL dedup, the MRCONSO aggregation,
+    its broadcast and the result. Separate loaded-CUI and SRC-only
+    aggregations, each broadcast per endpoint, took 8."""
+    import uuid
+
+    from nobletools_spark.sources.rrf import (
+        conso_row, load_rrf, rel_row, write_fixture_rrf)
+
+    p = str(tmp_path / "rrfj")
+    write_fixture_rrf(
+        p,
+        mrconso=[conso_row("C900", "Root Source", sab="SRC", code="V-TST"),
+                 conso_row("C901", "Alpha"), conso_row("C902", "Beta")],
+        mrsty=[],
+        mrrel=[rel_row("C901", "PAR", "C900"),
+               rel_row("C902", "PAR", "C901"),
+               rel_row("C900", "CHD", "C901")])
+    sc = spark.sparkContext
+    group = f"rrf-rel-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rels = {tuple(r) for r in load_rrf(spark, p)["relations"].collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rels == {("C901", "C900"), ("C902", "C901")}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+
+
 def test_rrf_filters_keep_src_roots(spark, tmp_path):
     """Filtered loads must not sever the SRC V-* root markers:
     ConceptImporter.java:836-847 exempts a row from BOTH the source and
