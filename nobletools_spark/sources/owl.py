@@ -140,7 +140,8 @@ def parse_owl(xml_text: str,
     STRUCTURAL reasoner (ontology/owl/OClass.java:208-219 +
     OOntology.java:533-535 StructuralReasonerFactory), whose told walk
     flattens equivalent-intersection conjuncts — measured directly in
-    the owl-hierarchy parity leg (tools/java_parity.py).
+    the owl-hierarchy parity leg (tools/parity.py, replayed by
+    tests/test_parity_goldens.py).
 
     ``union_children=True`` additionally turns named members of
     top-level equivalentClass unions into CHILDREN of the defined

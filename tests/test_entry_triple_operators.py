@@ -1,9 +1,11 @@
 """DuckDB oracle check for the entry queries over the triple operators
 the pipeline's triples and co-occurrence stages are built from: the isa
 closure (driver-side BFS), co-occurrence, and incremental
-co-occurrence maintenance and snapshot diff. Runs the local stand-in for
-the correctness gate (tools/validate_entry.py: row count, column names
-and exact values) at sf0.001."""
+co-occurrence maintenance and snapshot diff; plus the mention rows
+themselves, root-finding and by-ancestor mention rollups over that
+closure, and the terminology-template items. Runs the local stand-in
+for the correctness gate (tools/validate_entry.py: row count, column
+names and exact values) at sf0.001."""
 
 import os
 import subprocess
@@ -13,7 +15,8 @@ import pytest
 from test_entry_gate import REPO, SF_DIR
 
 QUERIES = ["kg_isa_closure", "kg_cooccurrence", "kg_incremental_cooc",
-           "kg_incremental_diff"]
+           "kg_incremental_diff", "kg_mentions", "kg_root_findings",
+           "kg_mentions_by_ancestor", "kg_template_items"]
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata absent")

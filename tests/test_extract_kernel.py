@@ -1,10 +1,12 @@
 """Goldens for the faithful extraction kernel (operators/extract_kernel).
 
 Every expected cell below is pinned to the REFERENCE binary's output:
-the identical template + documents run through the InformationExtractor
-parity leg (`python tools/java_parity.py extract`, RefExtract →
-CSVExporter RESULTS.tsv) and the cells matched verbatim (P=R=1.0).
-The goldens keep that agreement enforced without needing the JVM.
+the identical template + documents ran through the reference's
+InformationExtractor and CSVExporter RESULTS.tsv in the extract parity
+leg, and the cells matched verbatim (P=R=1.0, JAVA_PARITY.json at
+27cbc1d; the leg's engine half is replayed by
+tests/test_parity_goldens.py). The goldens keep that agreement
+enforced without needing the JVM.
 
 Covers: trigger-domain satisfaction (incl. the negated-trigger quirk),
 value domain with units + TextTools %.2f rendering, per-ANNOTATION

@@ -84,31 +84,32 @@ def test_punctuation_phrases_dead_for_parity():
 
 
 def test_lists_match_reference_lst_files():
-    """Each tuple must equal the parsed .lst file verbatim (content AND
-    order — findMatch is first-prefix-wins, NegEx.java:125-140)."""
-    import os
-
-    import pytest
+    """Each tuple equals the reference's parsed .lst file verbatim:
+    content AND order, since findMatch is first-prefix-wins
+    (NegEx.java:125-140). The lists are pinned as the sha256 of each
+    tuple joined by newlines. This test compared them against the .lst
+    files directly while the reference checkout was present (through
+    27cbc1d), and operators/negex.py has not changed since abbadeb,
+    before that commit."""
+    import hashlib
 
     from nobletools_spark.operators import negex as nx
 
-    base = "/root/reference/src/main/resources/resources/"
-    if not os.path.isdir(base):
-        pytest.skip("reference checkout not present")
-
-    def load(fn):
-        out = []
-        for line in open(base + fn, encoding="utf-8"):
-            line = line.strip()
-            if line and not line.startswith("#"):
-                out.append(line)
-        return tuple(out)
-
-    assert nx.PRE_NEGATION == load("NegExPreNegationPhrases.lst")
-    assert nx.POST_NEGATION == load("NegExPostNegationPhrases.lst")
-    assert nx.INDETERMINATE == load("NegExIndeterminatePhrases.lst")
-    assert nx.PSEUDO_NEGATION == load("NegExPseudoNegationPhrases.lst")
-    assert nx.CONJUNCTIONS == load("NegExPseudoConjunctions.lst")
+    pinned = {
+        "PRE_NEGATION": "1abd67a71f2b82a8d048755707ee5565"
+                        "bf20874befb24bed546b55e873021c9a",
+        "POST_NEGATION": "c6411a545dfc0d16ae12f1309bdcbd13"
+                         "8f75a360a8fff263a694642b306d3ba4",
+        "INDETERMINATE": "53657690e035bbb9bd0bf44d588e40ba"
+                         "5f5470af0efd633499d8359f97d09b79",
+        "PSEUDO_NEGATION": "db18a4a1a3f9c4d02605411f7e29cb42"
+                           "5a2787df5b9ea0acad5da11b5e9a72a5",
+        "CONJUNCTIONS": "f780b67d62c52109c2a8a912ac09bfba"
+                        "767f96c4c752a175ad0e1c87d86da1f1",
+    }
+    for name, digest in pinned.items():
+        joined = "\n".join(getattr(nx, name)).encode("utf-8")
+        assert hashlib.sha256(joined).hexdigest() == digest, name
 
 
 def test_indexof_tokenization_quirk_parity():
@@ -116,7 +117,7 @@ def test_indexof_tokenization_quirk_parity():
     substring occurrence (NegEx.java:216 text.indexOf(word)); a trigger
     word that also appears inside an earlier word is dropped. 'no' after
     'melanoma' (mela-NO-ma) never fires — verified against the compiled
-    reference (tools/java_parity.py negex leg)."""
+    reference in the negex parity leg (tests/test_parity_goldens.py)."""
     text = "Sections show melanoma but no evidence of deep margin involvement."
     mentions = match_sentence(text, IDX, MatchConfig())
     negex(text, mentions)

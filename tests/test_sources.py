@@ -180,15 +180,14 @@ def test_load_rrf_edge_filters_and_roots(spark, tmp_path):
 
     # reuse the parity leg's EXACT fixture so this unit test and the
     # rrf-hierarchy leg pin the same rows (no drift between the two)
-    tools_dir = pathlib.Path(__file__).resolve().parents[1] / "tools"
-    sys.path.insert(0, str(tools_dir))
+    tools_dir = str(pathlib.Path(__file__).resolve().parents[1] / "tools")
+    sys.path.insert(0, tools_dir)
     try:
-        from java_parity import emit_rrf_hier_fixture
+        from parity import RRF_HIER, emit_rrf_hier_fixture
     finally:
-        sys.path.pop(0)
-    p = str(tmp_path / "rrfh")
-    emit_rrf_hier_fixture(path=p)
-    t = load_rrf(spark, p)
+        sys.path.remove(tools_dir)
+    emit_rrf_hier_fixture(str(tmp_path))
+    t = load_rrf(spark, str(tmp_path / RRF_HIER))
     rels = {(r["cui"], r["parent"]) for r in t["relations"].collect()}
     assert rels == {("C901", "C900"), ("C902", "C901"),
                     ("C903", "C901"), ("C902", "C904")}
